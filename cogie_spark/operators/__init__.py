@@ -5,7 +5,6 @@ from cogie_spark.operators.dedup import (  # noqa: F401
     minhash_near_duplicates,
     semantic_duplicates,
 )
-from cogie_spark.operators.scoring import score_pairs  # noqa: F401
 from cogie_spark.operators.metrics import bcubed, blocking_quality, pairwise_prf  # noqa: F401
 from cogie_spark.operators.packing import pack_sequences, pack_stats  # noqa: F401
 from cogie_spark.operators.sampling import mix_report, mix_sample  # noqa: F401

@@ -26,7 +26,7 @@ from cogie_spark.functions.similarity import (
     tfidf_cosine_udf,
     token_set_ratio_native,
 )
-from cogie_spark.functions.text import normalize_text, tokens
+from cogie_spark.functions.text import tokens
 
 
 def corpus_idf(
@@ -83,49 +83,6 @@ def _collect_idf_rows(src, content_col, max_terms):
     )
 
 
-def score_pairs(
-    pairs: DataFrame,
-    files: DataFrame,
-    id_col: str = "file_id",
-    content_col: str = "content",
-    feature_chars: int = 2000,
-    jw_chars: int = 256,
-    ts_chars: int = 512,
-    weights: tuple[float, float, float] = (0.2, 0.5, 0.3),
-    idf: dict[str, float] | None = None,
-    partitions: int | None = None,
-) -> DataFrame:
-    """Join pair ids to features and compute the blended score.
-
-    score = w_jw * jaro_winkler + w_ts * token_set_ratio
-          + w_tf * tfidf_cosine — the north rule's scorer triple
-    (jw/tfidf Arrow-batched pandas UDFs, token-set pure JVM — the
-    cross-encoder replacement). The two quadratic scorers see bounded
-    windows — ``jw_chars`` and ``ts_chars`` — the same bounded-feature-
-    width discipline as the reference's max_seq_length=160-token pair
-    input (test_blink.py:53): per-pair scorer cost is O(window²), so an
-    unbounded window is the difference between a scorer stage that
-    scales with pair count and one that scales with pair×content size.
-    tfidf (linear) sees the full ``feature_chars`` window.
-    Two shuffles (the two feature joins); the scorers are narrow stages.
-    """
-    feats = files.select(
-        F.col(id_col).alias("_fid"),
-        F.substring(normalize_text(content_col), 1, feature_chars).alias("_feat"),
-    )
-    joined = pairs.join(
-        feats.withColumnRenamed("_fid", "left_id").withColumnRenamed("_feat", "_lf"), "left_id"
-    ).join(feats.withColumnRenamed("_fid", "right_id").withColumnRenamed("_feat", "_rf"), "right_id")
-    return score_features(
-        joined,
-        jw_chars=jw_chars,
-        ts_chars=ts_chars,
-        weights=weights,
-        idf=idf,
-        partitions=partitions,
-    )
-
-
 def score_features(
     joined: DataFrame,
     jw_chars: int = 256,
@@ -135,13 +92,18 @@ def score_features(
     partitions: int | None = None,
 ) -> DataFrame:
     """Score a pair table that already carries its feature columns
-    (_lf, _rf) — the join-free half of :func:`score_pairs`.
+    (_lf, _rf: normalized content windows) into the blended score.
 
-    Callers that must join other per-id payloads onto the pair table
-    anyway (run_linkage attaches MinHash signatures for the cascade
-    filter) should attach features in the SAME joins and call this
-    directly: every avoided pair-table shuffle is the dominant cost at
-    10^12-pair scale.
+    score = w_jw * jaro_winkler + w_ts * token_set_ratio
+          + w_tf * tfidf_cosine (jw/tfidf Arrow-batched pandas UDFs,
+    token-set pure JVM — the cross-encoder replacement). The two
+    quadratic scorers see bounded windows, ``jw_chars`` and
+    ``ts_chars``: per-pair cost is O(window²), the same bounded-width
+    discipline as the reference's max_seq_length=160-token pair input.
+    tfidf (linear) sees the whole feature window. run_linkage attaches
+    the features in the same pair-table joins that carry the MinHash
+    signatures for its cascade filter, so no extra pair-table shuffle
+    is spent on them.
 
     ``partitions`` controls the pre-scorer spread WITHOUT probing the
     plan (a ``joined.rdd.getNumPartitions()`` probe under AQE finalizes

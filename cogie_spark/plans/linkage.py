@@ -114,8 +114,30 @@ def run_linkage(
     become singleton clusters (cluster_id = own file_id), matching the
     reference's behavior of always emitting a link result per mention
     (el_toolkit.py:144-151, 'unk' on miss).
+
+    Optional input column ``sig`` (``array<bigint>``): a precomputed
+    MinHash signature per row, as :func:`signature_table` returns it for
+    ``cfg.num_perm`` / ``cfg.signature_mode``. When present it is used
+    as-is instead of signing ``content`` — the streaming path feeds
+    batch rows and persisted state rows through one call this way.
+
+    Optional input column ``resolved`` (``boolean``): rows already
+    linked against each other by an earlier run. A candidate pair of
+    two resolved rows is dropped before scoring, so it never forms an
+    edge; resolved rows still block with, score against and join
+    components through the unresolved ones (byte-identical rows still
+    collapse in the exact pre-pass). The streaming path marks its state
+    rows this way.
+
+    Without either column the plan is unchanged.
     """
     cfg = cfg or LinkageConfig()
+    for col, want in (("sig", "array<bigint>"), ("resolved", "boolean")):
+        got = files.schema[col].dataType.simpleString() if col in files.columns else want
+        if got != want:
+            raise TypeError(f"{col} must be {want}, got {got}")
+    has_sig = "sig" in files.columns
+    has_resolved = "resolved" in files.columns
 
     from pyspark import StorageLevel
 
@@ -179,17 +201,21 @@ def run_linkage(
         # pruning, which cost more than the planning it saved.
         files = _persist(reps_rows.select("_r.*"))
 
-    sigs = _persist(
-        signature_table(
-            files,
-            id_col=cfg.id_col,
-            content_col=cfg.content_col,
-            key_cols=cfg.key_cols,
-            num_perm=cfg.num_perm,
-            shingle_k=cfg.shingle_k,
-            mode=cfg.signature_mode,
+    if has_sig:
+        # a projection of the (already cached) input: nothing is re-signed
+        sigs = files.select(cfg.id_col, *cfg.key_cols, "sig")
+    else:
+        sigs = _persist(
+            signature_table(
+                files,
+                id_col=cfg.id_col,
+                content_col=cfg.content_col,
+                key_cols=cfg.key_cols,
+                num_perm=cfg.num_perm,
+                shingle_k=cfg.shingle_k,
+                mode=cfg.signature_mode,
+            )
         )
-    )
     blocks = bands_from_signatures(
         sigs,
         id_col=cfg.id_col,
@@ -248,12 +274,14 @@ def run_linkage(
         if cfg.cascade_sig_bits == 8
         else F.col("sig")
     ).alias("sig")
+    res = ["resolved"] if has_resolved else []
     side = sigs.select(F.col(cfg.id_col).alias("_sid"), cascade_sig).join(
         files.select(
             F.col(cfg.id_col).alias("_sid"),
             F.substring(
                 normalize_text(cfg.content_col), 1, cfg.feature_chars
             ).alias("_feat"),
+            *res,
         ),
         "_sid",
     )
@@ -264,6 +292,7 @@ def run_linkage(
                 F.col("_sid").alias("left_id"),
                 F.col("sig").alias("_lsig"),
                 F.col("_feat").alias("_lf"),
+                *[F.col(c).alias("_lres") for c in res],
             ),
             "left_id",
         )
@@ -272,10 +301,15 @@ def run_linkage(
                 F.col("_sid").alias("right_id"),
                 F.col("sig").alias("_rsig"),
                 F.col("_feat").alias("_rf"),
+                *[F.col(c).alias("_rres") for c in res],
             ),
             "right_id",
         )
-        .withColumn("est_jaccard", estimate_jaccard(F.col("_lsig"), F.col("_rsig"), cfg.num_perm))
+    )
+    if has_resolved:
+        pairs = pairs.filter(~(F.col("_lres") & F.col("_rres"))).drop("_lres", "_rres")
+    pairs = (
+        pairs.withColumn("est_jaccard", estimate_jaccard(F.col("_lsig"), F.col("_rsig"), cfg.num_perm))
         .filter(F.col("est_jaccard") >= cfg.prefilter_est_jaccard)
         .drop("_lsig", "_rsig")
     )

@@ -1,7 +1,8 @@
 """SparkSession factory with scale-oriented defaults.
 
-Tuned for the sandbox (local[N], single JVM) but every setting is the one
-we would ship to a 1000-executor cluster:
+Defaults fit the host it runs on (local[N], single JVM: N = its cores,
+heap = half its RAM up to 24g) but every other setting is the one we
+would ship to a 1000-executor cluster:
 
 - AQE on (runtime coalesce, skew-join splitting, dynamic join selection);
 - Arrow on (all scorers are pandas UDFs — Arrow batches are the Python
@@ -18,6 +19,19 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+MAX_DEFAULT_HEAP_MB = 24 * 1024
+
+
+def default_driver_memory() -> str:
+    """Half the host's MemTotal, capped at 24g: local mode runs driver
+    and executors in this one JVM, and a heap sized past the host's RAM
+    gets the JVM OOM-killed instead of spilling."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return f"{MAX_DEFAULT_HEAP_MB}m"
+    return f"{min(kb // 2048, MAX_DEFAULT_HEAP_MB)}m"
 
 
 def get_spark(
@@ -27,7 +41,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's standard config."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     master = master or os.environ.get("COGIE_SPARK_MASTER", f"local[{cpus}]")
     shuffle = shuffle_partitions or int(
         os.environ.get("COGIE_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
@@ -45,8 +59,11 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
         # local mode = one JVM for driver+executors: give it real heap
-        # or 32 concurrent tasks thrash GC (sandbox has 128 GiB)
-        .config("spark.driver.memory", os.environ.get("COGIE_DRIVER_MEM", "24g"))
+        # or concurrent tasks thrash GC, but never more than the host has
+        .config(
+            "spark.driver.memory",
+            os.environ.get("COGIE_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # collect_list aggregations (blocking's bucket pair generation)

@@ -10,6 +10,22 @@ batch operators (blocking -> scoring -> assignment) against the
 persisted cluster state, then appends to it. No separate streaming
 implementation of the operators exists — that is the point.
 
+One linkage pass per micro-batch: the batch's rows are signed and banded
+once; their bands are joined against the state's persisted band table
+to find the state rows they collide with; then ONE ``run_linkage`` call
+runs over the batch rows plus those state rows, every row carrying its
+MinHash signature in ``sig`` (fresh for the batch, persisted for the
+state) so nothing is re-signed. Cross-batch and within-batch pairs thus
+go through the same cascade, windows, IDF and threshold as the batch
+pipeline. State rows enter ``resolved``: a pair of two state rows was
+decided when they were linked and is not scored again, so every edge
+touches a batch row and a batch scores only pairs that touch one of its
+rows, never the state x state pairs of the families it collides with.
+Components map back cluster-mediated: a component holding state rows
+takes the smallest existing ``cluster_id`` among them, any other keeps
+run_linkage's smallest-member id. Existing cluster ids are never
+rewritten.
+
 State layout (under ``state_dir``, via TableIO):
 - ``members_delta_NNNNN`` : (file_id, cluster_id, lang, content, sig)
   — the rows linked by batch N, WITH their MinHash signatures.
@@ -38,7 +54,8 @@ State layout (under ``state_dir``, via TableIO):
 
 Per-batch cost: signature + banding O(batch); state is SCANNED
 (columnar, predicate-prunable) but never re-hashed and never shuffled
-wholesale — the feature join is bounded to candidate ids.
+wholesale — only the state rows that share a band with the batch enter
+the linkage.
 
 Legacy state (deltas written before the bands/manifest format) is
 migrated ONCE on first read: sig columns are backfilled from content
@@ -57,7 +74,6 @@ from pyspark.sql import functions as F
 from cogie_spark.io import fsio
 from cogie_spark.io.tableio import TableIO
 from cogie_spark.operators.blocking import bands_from_signatures, signature_table
-from cogie_spark.operators.scoring import score_pairs
 
 _MANIFEST = "_state_manifest.json"
 
@@ -224,13 +240,23 @@ def incremental_link_batch(
 ) -> DataFrame:
     """Link one micro-batch against current state; returns assignments.
 
-    New rows joining an existing cluster inherit its cluster_id; rows
-    matching only each other form a new cluster keyed by their min
-    file_id; everything else becomes a singleton. Transitivity ACROSS
-    batches is by design cluster-mediated (a new row links to a cluster,
-    not to individual members) — the same canonical-entity semantics as
-    the reference's alignment to a fixed KB entity
-    (/root/reference/cogie/toolkit/el/el_toolkit.py:131-143).
+    One ``run_linkage`` call over the batch rows plus the state rows
+    that share an LSH band with them. Each resulting component maps
+    back cluster-mediated: if it holds state rows, its new rows take
+    the smallest existing cluster_id among them; otherwise it is a new
+    cluster keyed by its min file_id (a lone row is a singleton).
+    Existing rows never change cluster. Only edges that touch a new row
+    count: pairs of two state rows are not scored (``resolved``), so two
+    existing clusters meet in one component only through new rows, and
+    those rows then take the smaller id. Transitivity counts through new
+    rows too: with existing cluster X and new rows A and C in one batch,
+    where A matches X and C matches only A, both A and C join X. This is
+    the same canonical-entity semantics as the reference's alignment to
+    a fixed KB entity (cogie/toolkit/el/el_toolkit.py:131-143).
+
+    Limit shared with the batch path: an LSH block over
+    ``max_block_size`` rows is salted and one over 32x that is dropped
+    (``candidate_pairs``), and state rows count toward a block's size.
     """
     spark = batch.sparkSession
     manifest = _read_manifest(state)
@@ -274,82 +300,67 @@ def incremental_link_batch(
         new_sigs = _persist(
             signature_table(batch, key_cols=("lang",), num_perm=num_perm, mode="fast")
         )
+        batch_rows = batch.select("file_id", "lang", "content").join(
+            new_sigs.select("file_id", "sig"), "file_id"
+        )
+        rows = batch_rows
 
         if have_state:
-            members_paths = _state_member_paths(state, manifest)
-            bands_paths = _state_band_paths(state, manifest)
-            old = spark.read.parquet(*members_paths)
             # state bands come straight off parquet — derived ONCE at
             # write time; no per-batch re-explode of the state sig table
-            ob = spark.read.parquet(*bands_paths)
+            ob = spark.read.parquet(*_state_band_paths(state, manifest))
             nb = bands_from_signatures(
                 new_sigs, key_cols=("lang",), bands=bands, rows_per_band=num_perm // bands
             )
-            cand = (
-                nb.alias("n")
-                .join(
-                    ob.alias("o"),
-                    (F.col("n.lang") == F.col("o.lang"))
-                    & (F.col("n.band_id") == F.col("o.band_id"))
-                    & (F.col("n.band_hash") == F.col("o.band_hash")),
-                )
-                .select(
-                    F.col("n.file_id").alias("left_id"), F.col("o.file_id").alias("right_id")
-                )
+            hit_ids = (
+                nb.join(ob.withColumnRenamed("file_id", "_oid"), ["lang", "band_id", "band_hash"])
+                .select(F.col("_oid").alias("file_id"))
                 .distinct()
             )
-            # feature join bounded to rows that actually appear in a
-            # candidate pair: the state is only SCANNED (columnar read),
-            # never shuffled wholesale — per-batch shuffle cost stays
-            # O(batch + matched)
-            cand_ids = (
-                cand.select(F.col("left_id").alias("file_id"))
-                .unionByName(cand.select(F.col("right_id").alias("file_id")))
-                .distinct()
+            # only the state rows sharing a band with the batch are read
+            # past the scan: the state is never shuffled wholesale, and
+            # its rows carry their persisted signatures into the linkage
+            old = _persist(
+                spark.read.parquet(*_state_member_paths(state, manifest))
+                .select("file_id", "cluster_id", "lang", "content", "sig")
+                .join(hit_ids, "file_id", "left_semi")
             )
-            both = (
-                batch.select("file_id", "lang", "content")
-                .unionByName(old.select("file_id", "lang", "content"))
-                .join(cand_ids, "file_id", "left_semi")
+            # state rows are marked resolved: their pairs with each other
+            # were decided when they were linked and are not scored again
+            rows = batch_rows.withColumn("resolved", F.lit(False)).unionByName(
+                old.drop("cluster_id").withColumn("resolved", F.lit(True))
             )
-            # partitions=None: unconditional cores*2 spread — micro-batch
-            # pair tables are small (shuffle is cheap) and the old probe
-            # double-executed the feature join EVERY batch under AQE
-            scored = score_pairs(cand, both)
-            links = (
-                scored.filter(F.col("score") >= threshold)
-                .join(old.select(F.col("file_id").alias("right_id"), "cluster_id"), "right_id")
-                .groupBy(F.col("left_id").alias("file_id"))
-                .agg(F.min("cluster_id").alias("cluster_id"))
-            )
-        else:
-            links = spark.createDataFrame([], "file_id string, cluster_id string")
 
-        # within-batch clustering of the still-unassigned rows; the
-        # inner pipeline's cached inputs are batch-scoped too — release
-        # them with ours once the delta is written
-        unassigned = batch.join(links, "file_id", "left_anti")
         from cogie_spark.plans.linkage import LinkageConfig, run_linkage
 
-        intra_out = run_linkage(
-            unassigned, LinkageConfig(threshold=threshold, num_perm=num_perm, bands=bands)
+        linked = run_linkage(
+            rows, LinkageConfig(threshold=threshold, num_perm=num_perm, bands=bands)
         )
         # _checkpoints too: released only at batch end, AFTER the delta
         # parquet write durably commits everything derived from them
-        to_unpersist.extend(intra_out.get("_persisted", []))
-        to_unpersist.extend(intra_out.get("_checkpoints", []))
-        intra = intra_out["clusters"]
-
-        assignments = links.unionByName(intra)
-        out = batch.select("file_id", "lang", "content").join(assignments, "file_id")
+        to_unpersist.extend(linked["_persisted"])
+        to_unpersist.extend(linked["_checkpoints"])
+        assignments = linked["clusters"]
+        if have_state:
+            # cluster-mediated map-back: a component holding state rows
+            # takes their smallest existing cluster_id, any other keeps
+            # run_linkage's smallest-member id; state ids never change
+            inherited = (
+                assignments.join(old.select("file_id", F.col("cluster_id").alias("_old")), "file_id")
+                .groupBy("cluster_id")
+                .agg(F.min("_old").alias("_old"))
+            )
+            assignments = assignments.join(inherited, "cluster_id", "left").select(
+                "file_id", F.coalesce("_old", "cluster_id").alias("cluster_id")
+            )
 
         # persist this batch's rows WITH signatures, and their band
         # memberships derived here once — future batches band the state
         # by scanning parquet, touching neither content nor the hash
         # family again
         new_members = (
-            out.select("file_id", "cluster_id", "lang", "content")
-            .join(new_sigs.select("file_id", "sig"), "file_id")
+            batch_rows.join(assignments, "file_id")
+            .select("file_id", "cluster_id", "lang", "content", "sig")
             .withColumn("src_batch", F.lit(batch_id))
         )
         members_name = f"members_delta_{batch_id:05d}"

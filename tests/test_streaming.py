@@ -420,6 +420,78 @@ def test_checkpoint_manager_uri_base(spark):
 
 
 
+def _partition(pairs) -> set[frozenset]:
+    by_cluster: dict[str, set] = {}
+    for fid, cid in pairs:
+        by_cluster.setdefault(cid, set()).add(fid)
+    return {frozenset(m) for m in by_cluster.values()}
+
+
+def test_two_batches_match_one_batch_run(spark):
+    """The fixture split round-robin into two micro-batches ends with the
+    same file partition as one run_linkage over all its rows: cross-batch
+    pairs get the same match decisions as within-batch ones."""
+    from cogie_spark.plans.linkage import run_linkage
+
+    batches = _slices(spark, n_groups=10, n_batches=2)
+    state = TableIO(spark, tempfile.mkdtemp(prefix="cogie_onepass_"))
+    per_batch = [
+        incremental_link_batch(b, state, batch_id=i).collect()
+        for i, b in enumerate(batches)
+    ]
+    streamed = per_batch[0] + per_batch[1]
+    first = {r["cluster_id"] for r in per_batch[0]}
+    assert any(r["cluster_id"] in first for r in per_batch[1]), "no cross-batch link"
+
+    out = run_linkage(code_files(spark, n_groups=10, seed=42))
+    batch_run = [(r["file_id"], r["cluster_id"]) for r in out["clusters"].collect()]
+    for df in out["_persisted"] + out["_checkpoints"]:
+        df.unpersist()
+    assert len(streamed) == len(batch_run)
+    got = _partition((r["file_id"], r["cluster_id"]) for r in streamed)
+    assert got == _partition(batch_run)
+    assert len(got) < len(batch_run), "fixture formed no clusters"
+
+
+
+def test_new_row_joins_existing_cluster_through_another_new_row(spark):
+    """Existing cluster X; one batch brings A and C, where A matches X,
+    C matches A and C does not match X. C must end in X's cluster: the
+    batch's rows and the state rows they collide with are linked in one
+    pass, and the component holding X keeps X's cluster id."""
+    import random
+
+    from cogie_spark.plans.linkage import run_linkage
+
+    rng = random.Random(7)
+    vocab = [
+        "".join(rng.choice("abcdefghijklmnopqrstuvwxyz") for _ in range(rng.randint(3, 9)))
+        for _ in range(1000)
+    ]
+    x = vocab[:60]
+    a = [vocab[400 + i] if 52 <= i < 59 else w for i, w in enumerate(x)]  # edits A/X
+    c = [vocab[700 + i] if 45 <= i < 48 else w for i, w in enumerate(a)]  # edits C/A
+    schema = "file_id string, lang string, content string"
+    rows = {fid: (fid, "py", " ".join(ws)) for fid, ws in (("f_x", x), ("f_a", a), ("f_c", c))}
+
+    # the premise, decided by the batch pipeline itself over the same rows
+    out = run_linkage(spark.createDataFrame(list(rows.values()), schema))
+    edges = {(r["left_id"], r["right_id"]) for r in out["edges"].collect()}
+    for df in out["_persisted"] + out["_checkpoints"]:
+        df.unpersist()
+    assert {tuple(sorted(e)) for e in edges} == {("f_a", "f_x"), ("f_a", "f_c")}, edges
+
+    state = TableIO(spark, tempfile.mkdtemp(prefix="cogie_chain_"))
+    incremental_link_batch(spark.createDataFrame([rows["f_x"]], schema), state, batch_id=0)
+    got = incremental_link_batch(
+        spark.createDataFrame([rows["f_a"], rows["f_c"]], schema), state, batch_id=1
+    )
+    assert {r["file_id"]: r["cluster_id"] for r in got.collect()} == {
+        "f_a": "f_x", "f_c": "f_x",
+    }
+
+
+
 # ------------------------------------------------------ corpus ingestion
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
